@@ -24,17 +24,20 @@ vectors.  The k-means-trained variant plugs in by swapping the centroid
 relation (``embed_ann_ivf_trained`` shows the trained-codebook seam).
 
 Scale design (100 TB of vectors):
-- cells (NCELLS rows), the residual codebook (M·K_C rows) and the
-  per-query probe/ADC tables (|q|·NPROBE·M·K_C rows) are control-plane
-  sized and broadcast; the corpus is never on the build side.
-- assignment + residual + encoding is ONE scan of the corpus followed by
-  a (vec, subspace)-keyed argmin group-by with map-side combine — the
-  FAISS ``add()`` pass.
-- scoring joins codes to the broadcast ADC table on (cell, m, code):
-  only candidates in probed cells match (inner join does the inverted-
-  list pruning declaratively), and the per-query top-k window rides
-  Catalyst's partial ``WindowGroupLimit`` — the exchange carries
-  O(queries·k) rows per partition.
+- the frozen index — cell ids and centroids (NCELLS rows) and the
+  residual codebook (M·K_C entries) — is control-plane sized and built
+  once per call by ``build_index`` as numpy arrays on the driver; the
+  corpus is never collected and never on a build side.
+- assignment + residual + encoding is ONE Arrow pass per corpus row
+  through the ``plans/pq.py`` numpy kernel — the FAISS ``add()`` pass,
+  no shuffle.
+- the probe and per-query ADC tables (|q|·NPROBE·M·K_C rows) are built
+  exactly on the driver and broadcast as a local relation; scoring
+  joins codes to them on (cell, m, code): only candidates in probed
+  cells match (the inner join does the inverted-list pruning
+  declaratively), and the per-query top-k window rides Catalyst's
+  partial ``WindowGroupLimit`` — the exchange carries O(queries·k) rows
+  per partition.
 
 Reference parity: beyond-reference (LLM-pipeline extension).
 """
@@ -45,6 +48,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from star_schema_etl_airflow_spark.plans.pq import (
+    _adc_search,
+    _adc_topk,
+    _np_codebook,
+    _np_encode,
+    _np_rows,
     _sv_duck,
     _SQDIST_D,
     _SV_S,
@@ -52,6 +60,7 @@ from star_schema_etl_airflow_spark.plans.pq import (
     K_C,
     M_SUB,
     N_QUERIES,
+    PQIndex,
     TOP_K,
 )
 from star_schema_etl_airflow_spark.registry import QuerySpec, register
@@ -62,204 +71,34 @@ NPROBE = 2
 _CB_LO = N_QUERIES + NCELLS          # codebook training band
 _CB_HI = N_QUERIES + NCELLS + K_C
 
-# int64 sqdist over full 64-dim scaled vectors (cell assignment / probe)
+# int64 sqdist over full 64-dim scaled vectors (exact re-rank baselines)
 _SQ64_S = (
     "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
     "0L, (acc, v) -> acc + v)"
-)
-# residual slice for subspace m (0-based m, 1-based slice)
-_RSUB_S = (
-    f"zip_with(slice(sv, m * {D_SUB} + 1, {D_SUB}), "
-    f"slice(csv, m * {D_SUB} + 1, {D_SUB}), (x, y) -> x - y)"
 )
 
 
 SHORTLIST = 50   # ADC shortlist depth for the refine (re-rank) stage
 
 
-_D_CELL = _SQ64_S.format(a="sv", b="csv")
-_D_ENC = _SQ64_S.format(a="rsub", b="csub")
-
-
-def _rsub_of(cand: DataFrame, cells: DataFrame) -> DataFrame:
-    """(cand_id, cell, m, rsub): nearest-cell assignment (tie → lowest
-    cell id, via an aggregatable ``min(struct)`` with map-side combine)
-    and the per-subspace residual slices — per-VECTOR pure given
-    ``cells``, which is what makes encoding incremental for free."""
-    assigned = (
-        cand.crossJoin(F.broadcast(cells))
-        .select(
-            "cand_id", "sv", "csv", "cell",
-            F.struct(F.expr(_D_CELL).alias("d"), F.col("cell").alias("c"))
-            .alias("dc"),
-        )
-        .groupBy("cand_id")
-        .agg(
-            F.min("dc").getField("c").alias("cell"),
-            F.first("sv").alias("sv"),
-        )
-        .join(F.broadcast(cells), "cell")
-    )
-    return assigned.select(
-        "cand_id", "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(M_SUB - 1))).alias("m"),
-        "sv", "csv",
-    ).select("cand_id", "cell", "m", F.expr(_RSUB_S).alias("rsub"))
-
-
-def _artifacts(emb: DataFrame, cells: DataFrame | None = None):
-    """The frozen index artifacts: coarse ``cells`` and the residual
-    codebook ``cb`` (the training band's residual subvectors, taken
-    against whichever coarse quantizer is in force).  Both are
-    control-plane sized; a deployment materializes them once per index
-    version.  ``cells`` defaults to the deterministic band quantizer;
-    the trained variant passes the scaled k-means codebook."""
+def build_index(head, cells: DataFrame | None = None) -> PQIndex:
+    """The frozen IVFADC index as numpy arrays, from collected
+    (vec_id, sv) rows covering ``vec_id < _CB_HI`` (other rows are
+    ignored): the coarse cells — the deterministic band quantizer, or
+    ``cells`` (a (cell, csv) relation, e.g. the scaled k-means
+    codebook) when given — and the residual codebook, the training
+    band's residuals against whichever cells are in force.  A
+    deployment builds it once per index version."""
     if cells is None:
-        cells = (
-            emb.filter(
-                (F.col("vec_id") >= N_QUERIES)
-                & (F.col("vec_id") < N_QUERIES + NCELLS)
-            )
-            .select(F.col("vec_id").alias("cell"), F.col("sv").alias("csv"))
+        ids, C = _np_rows(
+            r for r in head if N_QUERIES <= r["vec_id"] < _CB_LO
         )
-    band = emb.filter(
-        (F.col("vec_id") >= _CB_LO) & (F.col("vec_id") < _CB_HI)
-    ).withColumnRenamed("vec_id", "cand_id")
-    cb = _rsub_of(band, cells).select(
-        F.col("cand_id").alias("cid"), "m", F.col("rsub").alias("csub")
+    else:
+        ids, C = _np_rows(cells.collect(), "cell", "csv")
+    cids, sub = _np_codebook(
+        [r for r in head if _CB_LO <= r["vec_id"] < _CB_HI], C
     )
-    return cells, cb
-
-
-# --- vectorized add() pass (r17, guide §4.1/§4.2) ---------------------------
-#
-# The assignment + residual + per-subspace encode was an interpreted HOF
-# fold (``aggregate(zip_with(...))``) per (row, cell) and per
-# (row, m, centroid) pair — NCELLS + M_SUB·K_C interpreted folds per
-# corpus row, the dominant per-row cost of every IVFADC query.  The r16
-# attempt to unroll those folds into Catalyst expressions regressed on
-# PLANNING cost (~600-node trees, >1 s per call) and was reverted; the
-# arithmetic belongs in numpy behind ONE Arrow boundary crossing, where
-# planning cost is constant and the per-row work is vectorized.  The
-# artifacts (cells, residual codebook, per-query ADC tables) are
-# control-plane sized BY DESIGN (module docstring) so collecting them to
-# the driver is cheap; everything stays int64 — numpy int64 arithmetic
-# is exact at the documented headroom (ADC sums < 6e15 ≪ 2⁶³), and
-# ``argmin`` over arrays sorted by id ascending reproduces the SQL
-# ``min(struct(d, id))`` tie-break (first minimum = lowest id) exactly.
-
-
-def _np_cells(cells: DataFrame):
-    """(ids, C): the coarse quantizer collected into numpy arrays sorted
-    by cell id ascending (argmin tie → lowest cell id)."""
-    import numpy as np
-
-    rows = sorted(cells.collect(), key=lambda r: r["cell"])
-    ids = np.array([r["cell"] for r in rows], dtype=np.int64)
-    C = np.array([list(r["csv"]) for r in rows], dtype=np.int64)
-    return ids, C
-
-
-def _np_assign(X, C):
-    """Row index into ``C`` of each vector's nearest cell — exact int64
-    L2, ties to the lowest row (= lowest id; ``C`` is sorted by id)."""
-    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-
-
-def _np_codebook(band_rows, ids, C):
-    """(cids, sub): the residual codebook from the training band's
-    (vec_id, sv) rows — numpy twin of ``_rsub_of`` on the band, sorted
-    by cid ascending (argmin tie → lowest cid)."""
-    import numpy as np
-
-    rows = sorted(band_rows, key=lambda r: r["vec_id"])
-    cids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    B = np.array([list(r["sv"]) for r in rows], dtype=np.int64)
-    R = B - C[_np_assign(B, C)]
-    sub = [
-        np.ascontiguousarray(R[:, m * D_SUB:(m + 1) * D_SUB])
-        for m in range(M_SUB)
-    ]
-    return cids, sub
-
-
-def _np_encode(cand: DataFrame, ids, C, cids, sub) -> DataFrame:
-    """The vectorized add() pass over ANY (cand_id, sv) relation: one
-    Arrow crossing per corpus row, assignment/residual/encode in int64
-    numpy.  Same output contract as the former fold-based encode —
-    (cand_id, cell, m, code), one row per (vector, subspace)."""
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.array([list(v) for v in pdf["sv"]], dtype=np.int64)
-            a = _np_assign(X, C)
-            cell = ids[a]
-            R = X - C[a]
-            cand_id = pdf["cand_id"].to_numpy(dtype=np.int64)
-            frames = []
-            for m in range(M_SUB):
-                S = R[:, m * D_SUB:(m + 1) * D_SUB]
-                d = ((S[:, None, :] - sub[m][None, :, :]) ** 2).sum(axis=2)
-                frames.append(pd.DataFrame({
-                    "cand_id": cand_id,
-                    "cell": cell,
-                    "m": np.full(n, m, dtype=np.int32),
-                    "code": cids[d.argmin(axis=1)],
-                }))
-            yield pd.concat(frames, ignore_index=True)
-
-    return cand.select("cand_id", "sv").mapInPandas(
-        kernel, schema="cand_id long, cell long, m int, code long"
-    )
-
-
-def _np_qtab(qrows, ids, C, cids, sub, nprobe: int):
-    """Probe + per-query ADC lookup tables, computed exactly on the
-    driver (|q|·nprobe·M·K_C rows — control-plane sized by design):
-    rows of (query_id, cell, m, cid, qdist).  Probe order ties break on
-    (d, cell) ascending like the former window's orderBy."""
-    import numpy as np
-
-    out = []
-    for r in sorted(qrows, key=lambda r: r["vec_id"]):
-        qv = np.array(list(r["sv"]), dtype=np.int64)
-        d = ((qv[None, :] - C) ** 2).sum(axis=1)
-        for j in np.lexsort((ids, d))[:nprobe]:
-            res = qv - C[j]
-            for m in range(M_SUB):
-                s = res[m * D_SUB:(m + 1) * D_SUB]
-                dd = ((s[None, :] - sub[m]) ** 2).sum(axis=1)
-                # one row per codebook entry of the probed (query, cell)
-                for cid, qd in zip(cids, dd):
-                    out.append((
-                        int(r["vec_id"]), int(ids[j]), m,
-                        int(cid), int(qd),
-                    ))
-    return out
-
-
-def _encode(cand: DataFrame, cells: DataFrame, cb: DataFrame) -> DataFrame:
-    """(cand_id, cell, code per subspace) — the FAISS ``add()`` pass
-    for ANY (cand_id, sv) relation against frozen artifacts, given as
-    the control-plane (cells, cb) DataFrames; collects both (tiny by
-    contract) and runs the vectorized encode."""
-    import numpy as np
-
-    ids, C = _np_cells(cells)
-    rows = sorted(cb.collect(), key=lambda r: (r["m"], r["cid"]))
-    cids = np.array(sorted({r["cid"] for r in rows}), dtype=np.int64)
-    sub = []
-    for m in range(M_SUB):
-        mr = [r for r in rows if r["m"] == m]
-        assert [r["cid"] for r in mr] == list(cids), "ragged codebook"
-        sub.append(np.array([list(r["csub"]) for r in mr], dtype=np.int64))
-    return _np_encode(cand, ids, C, cids, sub)
+    return PQIndex(ids, C, cids, sub)
 
 
 def _adc_scores(spark: SparkSession, sf_dir: str, codes_of=None,
@@ -271,15 +110,13 @@ def _adc_scores(spark: SparkSession, sf_dir: str, codes_of=None,
     ``codes_of(emb, encode)`` overrides how the code table is built
     (the incremental-add path supplies a union of frozen + delta
     encodes; ``encode(cand)`` is the vectorized add() pass against this
-    call's frozen artifacts); ``nprobe`` overrides the probe depth (the
+    call's frozen index); ``nprobe`` overrides the probe depth (the
     eval sweep); ``cells_of(spark, sf_dir)`` overrides the coarse
     quantizer (the k-means-trained variant); ``rotate`` is a Spark-SQL
     expression over a bound array column named ``sv`` applying an
     orthogonal-up-to-scale INT64 transform to every vector at load (the
     OPQ seam — ``plans/ivfpq_opq.py``; ``cells_of`` must rotate its
     centroids identically)."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_SV_S).alias("sv")
     )
@@ -290,59 +127,19 @@ def _adc_scores(spark: SparkSession, sf_dir: str, codes_of=None,
     # band quantizer when no trained cells are supplied) — the three
     # deterministic head bands are contiguous by construction
     head = emb.filter(F.col("vec_id") < _CB_HI).collect()
-    if cells_of is None:
-        crows = [
-            {"cell": r["vec_id"], "csv": r["sv"]}
-            for r in head if N_QUERIES <= r["vec_id"] < _CB_LO
-        ]
-        ids = np.array(
-            sorted(r["cell"] for r in crows), dtype=np.int64
-        )
-        C = np.array(
-            [list(r["csv"]) for r in sorted(crows, key=lambda r: r["cell"])],
-            dtype=np.int64,
-        )
-    else:
-        ids, C = _np_cells(cells_of(spark, sf_dir))
-    cids, sub = _np_codebook(
-        [r for r in head if _CB_LO <= r["vec_id"] < _CB_HI], ids, C
-    )
+    cells = None if cells_of is None else cells_of(spark, sf_dir)
+    ix = build_index(head, cells)
 
     def encode(cand: DataFrame) -> DataFrame:
-        return _np_encode(cand, ids, C, cids, sub)
+        return _np_encode(cand, ix)
 
     if codes_of is None:
-        cand = emb.filter(F.col("vec_id") >= N_QUERIES).withColumnRenamed(
-            "vec_id", "cand_id"
-        )
-        codes = encode(cand)
+        codes = encode(emb.filter(F.col("vec_id") >= N_QUERIES)
+                       .withColumnRenamed("vec_id", "cand_id"))
     else:
         codes = codes_of(emb, encode)
-
-    # --- search(): probe cells, ADC tables, score codes --------------------
-    # the probe + per-query lookup tables are |q|·nprobe·M·K_C rows —
-    # computed exactly on the driver and shipped as a broadcast literal
-    # (replaces a window + explode + two joins of plan per call)
-    qtab = spark.createDataFrame(
-        _np_qtab(
-            [r for r in head if r["vec_id"] < N_QUERIES],
-            ids, C, cids, sub, nprobe,
-        ),
-        schema="query_id long, cell long, m int, cid long, qdist long",
-    )
-
-    adc = (
-        codes.join(
-            F.broadcast(qtab),
-            (codes.cell == qtab.cell)
-            & (codes.m == qtab.m)
-            & (codes.code == qtab.cid),
-        )
-        .select("query_id", "cand_id", codes.cell, "qdist")
-        .groupBy("query_id", "cand_id", "cell")
-        .agg(F.sum("qdist").alias("adc_dist"))
-    )
-    return adc, emb
+    queries = [r for r in head if r["vec_id"] < N_QUERIES]
+    return _adc_search(spark, codes, queries, ix, nprobe), emb
 
 
 def embed_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,15 +147,7 @@ def embed_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance (the codes-only scan — no full vectors touched at query
     time)."""
     adc, _ = _adc_scores(spark, sf_dir)
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _adc_topk(adc)
 
 
 def embed_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,12 +170,7 @@ def _refine(adc: DataFrame, emb: DataFrame) -> DataFrame:
     """The §VI refine stage on any ADC relation: ADC shortlist → exact
     int64 L2 re-rank → final top-``TOP_K`` (shared by the rerank query
     and the nprobe eval sweep)."""
-    ws = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    short = (
-        adc.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= SHORTLIST)
-        .drop("srank")
-    )
+    short = _adc_topk(adc, SHORTLIST).drop("rank")
     qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("sv").alias("qsv")
     )
@@ -572,6 +356,19 @@ IVFPQ_ADD_CUT = 300   # at-rest corpus: vec_id < CUT; delta batch: >= CUT
 assert IVFPQ_ADD_CUT >= _CB_HI, "artifacts must come from the at-rest corpus"
 
 
+def _append_codes(emb: DataFrame, encode) -> DataFrame:
+    """The append-encode code table (a ``codes_of`` for ``_adc_scores``):
+    the at-rest band and the delta band, each encoded separately against
+    the same frozen index, then unioned."""
+    def band(cond):
+        return emb.filter(cond).withColumnRenamed("vec_id", "cand_id")
+
+    at_rest = band((F.col("vec_id") >= N_QUERIES)
+                   & (F.col("vec_id") < IVFPQ_ADD_CUT))
+    delta = band(F.col("vec_id") >= IVFPQ_ADD_CUT)
+    return encode(at_rest).unionByName(encode(delta))
+
+
 def embed_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest path of a deployed IVFADC index (FAISS ``add()``):
     new vectors are encoded against the FROZEN artifacts (cells +
@@ -581,32 +378,14 @@ def embed_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle is the FULL-REBUILD oracle ON PURPOSE (the
     ``kmv_incremental_merge`` convention): encoding is per-vector pure
-    given (cells, cb), so append-encode must equal rebuild EXACTLY —
+    given the frozen index, so append-encode must equal rebuild EXACTLY —
     checked differentially, which is what licenses maintaining the
     code table incrementally at 100 TB.  (Here the delta is the
     ``vec_id >= IVFPQ_ADD_CUT`` band — a deterministic stand-in for an
     ingest day; both encode passes run against the same frozen
-    broadcast artifacts.)"""
-    def codes_of(emb, encode):
-        at_rest = emb.filter(
-            (F.col("vec_id") >= N_QUERIES)
-            & (F.col("vec_id") < IVFPQ_ADD_CUT)
-        ).withColumnRenamed("vec_id", "cand_id")
-        delta = emb.filter(
-            F.col("vec_id") >= IVFPQ_ADD_CUT
-        ).withColumnRenamed("vec_id", "cand_id")
-        return encode(at_rest).unionByName(encode(delta))
-
-    adc, _ = _adc_scores(spark, sf_dir, codes_of=codes_of)
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    index.)"""
+    adc, _ = _adc_scores(spark, sf_dir, codes_of=_append_codes)
+    return _adc_topk(adc)
 
 
 # same oracle ON PURPOSE: append-encode must equal full rebuild exactly
@@ -631,6 +410,28 @@ def ivfpq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``embed_topk_cosine`` shape, int64 L2 here) — corpus-linear, built
     once and shared by every config; each config reuses the frozen
     artifacts and differs only in the probe filter."""
+    from star_schema_etl_airflow_spark.functions.caching import persist_once
+
+    exact = _exact_topk(spark, sf_dir)
+    out = None
+    for p in EVAL_NPROBES:
+        adc, emb_p = _adc_scores(spark, sf_dir, nprobe=p)
+        adc = persist_once(adc)
+        approx = _refine(adc, emb_p).select("query_id", "cand_id")
+        row = _recall_row(adc, approx, exact).select(
+            F.lit(p).cast("int").alias("nprobe"), "*"
+        )
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted exact int64 top-``TOP_K`` (query_id, cand_id) —
+    the recall baseline of the eval queries: a broadcast-query full
+    scan (the repo's ``embed_topk_cosine`` shape, int64 L2 here),
+    corpus-linear and built once per eval call."""
+    from star_schema_etl_airflow_spark.functions.caching import persist_once
+
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_SV_S).alias("sv")
     )
@@ -640,40 +441,39 @@ def ivfpq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         F.col("vec_id").alias("cand_id"), F.col("sv").alias("csv2")
     )
-    d_exact = _SQ64_S.format(a="qsv", b="csv2")
     we = Window.partitionBy("query_id").orderBy("d", "cand_id")
-    from star_schema_etl_airflow_spark.functions.caching import persist_once
-
-    exact = persist_once(
+    return persist_once(
         F.broadcast(q).crossJoin(c)
-        .select("query_id", "cand_id", F.expr(d_exact).alias("d"))
+        .select(
+            "query_id", "cand_id",
+            F.expr(_SQ64_S.format(a="qsv", b="csv2")).alias("d"),
+        )
         .withColumn("rank", F.row_number().over(we))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "cand_id")
     )
+
+
+def _recall_row(adc: DataFrame, approx: DataFrame,
+               exact: DataFrame) -> DataFrame:
+    """One eval row (n_scored, n_hits, recall): the scored-candidate
+    volume of ``adc`` and recall@k of ``approx``'s (query_id, cand_id)
+    pairs against ``exact``."""
     denom = float(N_QUERIES * TOP_K)
-    out = None
-    for p in EVAL_NPROBES:
-        adc, emb_p = _adc_scores(spark, sf_dir, nprobe=p)
-        adc = persist_once(adc)
-        approx = _refine(adc, emb_p).select("query_id", "cand_id")
-        row = (
-            adc.agg(F.count(F.lit(1)).alias("n_scored"))
-            .crossJoin(
-                approx.join(exact, ["query_id", "cand_id"])
-                .agg(F.count(F.lit(1)).alias("n_hits"))
-            )
-            .select(
-                F.lit(p).cast("int").alias("nprobe"),
-                F.col("n_scored").cast("long").alias("n_scored"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.round(
-                    F.col("n_hits").cast("double") / F.lit(denom), 9
-                ).alias("recall"),
-            )
+    return (
+        adc.agg(F.count(F.lit(1)).alias("n_scored"))
+        .crossJoin(
+            approx.join(exact, ["query_id", "cand_id"])
+            .agg(F.count(F.lit(1)).alias("n_hits"))
         )
-        out = row if out is None else out.unionByName(row)
-    return out
+        .select(
+            F.col("n_scored").cast("long").alias("n_scored"),
+            F.col("n_hits").cast("long").alias("n_hits"),
+            F.round(
+                F.col("n_hits").cast("double") / F.lit(denom), 9
+            ).alias("recall"),
+        )
+    )
 
 
 # oracle: the shared CTE chain (sv..codes, qdistc) + per-nprobe probe/
@@ -860,15 +660,7 @@ def embed_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means CTEs (``plans/clustering_queries.py``) into the verified
     IVFADC chain."""
     adc, _ = _adc_scores(spark, sf_dir, cells_of=_trained_cells)
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _adc_topk(adc)
 
 
 def _trained_oracle() -> str:

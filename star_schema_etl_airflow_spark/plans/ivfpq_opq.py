@@ -35,18 +35,26 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from star_schema_etl_airflow_spark.plans.ivfpq import (
     IVFPQ_ORACLE,
     NCELLS,
     _adc_scores,
+    _append_codes,
+    _exact_topk,
+    _recall_row,
     _trained_cells,
     _trained_oracle,
     mat_ctes,
 )
-from star_schema_etl_airflow_spark.plans.pq import N_QUERIES, TOP_K, _sv_duck
+from star_schema_etl_airflow_spark.plans.pq import (
+    N_QUERIES,
+    TOP_K,
+    _adc_topk,
+    _sv_duck,
+)
 from star_schema_etl_airflow_spark.registry import QuerySpec, register
 
 DIM = 64
@@ -124,15 +132,7 @@ def embed_ivfpq_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells_of=_rotated_trained_cells,
         rotate=_rot_spark("sv"),
     )
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _adc_topk(adc)
 
 
 def _opq_oracle(seed: int = OPQ_SEED) -> str:
@@ -225,31 +225,8 @@ def ivfpq_variant_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation — the measured justification for each lever, readable by
     a deployment before choosing an index recipe."""
     from star_schema_etl_airflow_spark.functions.caching import persist_once
-    from star_schema_etl_airflow_spark.plans.ivfpq import _SQ64_S
-    from star_schema_etl_airflow_spark.plans.pq import _SV_S
-    from star_schema_etl_airflow_spark.sources.fixtures import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_SV_S).alias("sv")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sv").alias("qsv")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("cand_id"), F.col("sv").alias("csv2")
-    )
-    we = Window.partitionBy("query_id").orderBy("d", "cand_id")
-    exact = persist_once(
-        F.broadcast(q).crossJoin(c)
-        .select(
-            "query_id", "cand_id",
-            F.expr(_SQ64_S.format(a="qsv", b="csv2")).alias("d"),
-        )
-        .withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id")
-    )
-    denom = float(N_QUERIES * TOP_K)
+    exact = _exact_topk(spark, sf_dir)
     variants = [
         ("band", {}),
         ("trained", {"cells_of": _trained_cells}),
@@ -257,30 +234,14 @@ def ivfpq_variant_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("opq", {"cells_of": _rotated_trained_cells,
                  "rotate": _rot_spark("sv")}),
     ]
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
     out = None
     for name, kw in variants:
         adc, _ = _adc_scores(spark, sf_dir, **kw)
         adc = persist_once(adc)
-        topk = (
-            adc.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "cand_id")
-        )
-        row = (
-            adc.agg(F.count(F.lit(1)).alias("n_scored"))
-            .crossJoin(
-                topk.join(exact, ["query_id", "cand_id"])
-                .agg(F.count(F.lit(1)).alias("n_hits"))
-            )
-            .select(
-                F.lit(name).alias("variant"),
-                F.col("n_scored").cast("long").alias("n_scored"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.round(
-                    F.col("n_hits").cast("double") / F.lit(denom), 9
-                ).alias("recall_codes"),
-            )
+        topk = _adc_topk(adc).select("query_id", "cand_id")
+        row = _recall_row(adc, topk, exact).select(
+            F.lit(name).alias("variant"), "n_scored", "n_hits",
+            F.col("recall").alias("recall_codes"),
         )
         out = row if out is None else out.unionByName(row)
     return out
@@ -357,33 +318,13 @@ def embed_ivfpq_opq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     disturb the per-vector purity that licenses append-encode, so this
     shares ``embed_ivfpq_opq``'s full-rebuild oracle VERBATIM (the
     ``embed_ivfpq_incremental`` convention)."""
-    from star_schema_etl_airflow_spark.plans.ivfpq import IVFPQ_ADD_CUT
-
-    def codes_of(emb, encode):
-        at_rest = emb.filter(
-            (F.col("vec_id") >= N_QUERIES)
-            & (F.col("vec_id") < IVFPQ_ADD_CUT)
-        ).withColumnRenamed("vec_id", "cand_id")
-        delta = emb.filter(
-            F.col("vec_id") >= IVFPQ_ADD_CUT
-        ).withColumnRenamed("vec_id", "cand_id")
-        return encode(at_rest).unionByName(encode(delta))
-
     adc, _ = _adc_scores(
         spark, sf_dir,
-        codes_of=codes_of,
+        codes_of=_append_codes,
         cells_of=_rotated_trained_cells,
         rotate=_rot_spark("sv"),
     )
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _adc_topk(adc)
 
 
 # same oracle ON PURPOSE: rotated append-encode must equal the rotated

@@ -26,26 +26,38 @@ differences: exact under any partitioning, any fold order, both
 engines.  Headroom: coords < 0.6 ⇒ per-subspace dist < 2e13, ADC sum
 < 2e14 ≪ 2^63.
 
+One kernel for the whole family: flat ADC is IVFADC with a single
+coarse cell (Jégou et al. §V), so ``pq_adc_topk`` runs the numpy
+kernels below over one all-zero cell — the residual is the vector
+itself — and ``plans/ivfpq.py`` runs the same kernels over its real
+cells.
+
 Scale design (100 TB of vectors):
 
-- the codebook (M·K_C rows) and the per-query ADC tables
-  (|q|·M·K_C rows) are control-plane sized and broadcast — the vector
-  corpus is never on the build side of any join.
-- encoding shuffles (vec, subspace)-keyed rows once for the argmin
-  group-by (map-side combine applies; at corpus scale this is the one
-  full pass, equivalent to FAISS's add()).
-- scoring touches codes only — |corpus|·M rows joined to the broadcast
-  ADC table, then the per-query top-k window rides Catalyst's
+- the frozen index (cell ids and centroids, codebook ids and the
+  per-subspace codebook) is control-plane sized and held as numpy
+  arrays on the driver; the kernel closure ships them to the workers.
+- encoding is ONE Arrow pass per corpus row (``mapInPandas``):
+  assignment, residual and the per-subspace argmin in int64 numpy —
+  no shuffle, no per-(row, centroid) interpreted fold, constant
+  planning cost.  This is FAISS's ``add()``.
+- the per-query ADC tables (|q|·nprobe·M·K_C rows) are computed
+  exactly on the driver and enter the plan as a broadcast local
+  relation; scoring touches codes only — |corpus|·M rows joined to
+  that table, then the per-query top-k window rides Catalyst's
   ``InferWindowGroupLimit`` partial limit (same pinned shape as
   ``embed_topk_cosine``), so the exchange carries O(queries·k) per
   partition, never |corpus|·|queries|.
-- argmin is ``min(struct(dist, cid))`` — associative, deterministic
-  (ties break toward the lowest centroid id), no window.
+- argmin over arrays sorted by id ascending takes the first minimum,
+  which is the oracle's ``min(struct(d, id))`` contract: ties break
+  toward the lowest cell id and the lowest codebook id.
 
 Reference parity: beyond-reference (LLM-pipeline extension).
 """
 
 from __future__ import annotations
+
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -66,10 +78,6 @@ SCALE = 1_000_000
 _SV_S = (
     "transform(embedding, x -> "
     f"cast(floor(cast(x as double) * {SCALE}.0d + 0.5d) as bigint))"
-)
-_SQDIST_S = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-    "0L, (acc, v) -> acc + v)"
 )
 
 
@@ -94,62 +102,167 @@ _SQDIST_D = (
 )
 
 
-def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query top-``TOP_K`` candidates by PQ asymmetric distance."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_SV_S).alias("sv")
-    )
-    # one row per (vector, subspace) with the D_SUB-dim scaled slice
-    sub = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(M_SUB - 1))).alias("m"),
-        F.col("sv"),
-    ).select(
-        "vec_id", "m",
-        F.expr(f"slice(sv, m * {D_SUB} + 1, {D_SUB})").alias("subv"),
+# --- the numpy PQ kernel ----------------------------------------------------
+#
+# Every PQ/IVFADC encode and ADC table goes through these functions.  All
+# arithmetic is int64 numpy — exact at the documented headroom — and every
+# id array is sorted ascending, so ``argmin`` (first minimum) reproduces
+# the oracles' ``min(struct(d, id))`` tie-break exactly.
+
+
+class PQIndex(NamedTuple):
+    """A frozen (IVF)PQ index: ``ids`` (cell ids, ascending) with their
+    centroids ``C`` (one int64 row each), and the residual codebook —
+    ``cids`` (codebook ids, ascending) and ``sub`` of shape
+    (M_SUB, len(cids), D_SUB), one codebook per subspace."""
+
+    ids: Any
+    C: Any
+    cids: Any
+    sub: Any
+
+
+def _np_rows(rows, id_col: str = "vec_id", vec_col: str = "sv"):
+    """(ids, X): collected rows as int64 arrays sorted by id ascending."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: r[id_col])
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    return ids, np.array([list(r[vec_col]) for r in rows], dtype=np.int64)
+
+
+def _np_assign(X, C):
+    """Row index into ``C`` of each vector's nearest cell — exact int64
+    L2, ties to the lowest row (= lowest id; ``C`` is sorted by id)."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _np_codebook(band_rows, C):
+    """(cids, sub): the residual codebook from the training band's
+    (vec_id, sv) rows — each band vector minus its nearest centroid,
+    split into subspaces, sorted by cid ascending."""
+    import numpy as np
+
+    cids, B = _np_rows(band_rows)
+    R = B - C[_np_assign(B, C)]
+    sub = R.reshape(len(cids), M_SUB, D_SUB).transpose(1, 0, 2)
+    return cids, np.ascontiguousarray(sub)
+
+
+def _np_encode(cand: DataFrame, ix: PQIndex) -> DataFrame:
+    """The vectorized add() pass over ANY (cand_id, sv) relation: one
+    Arrow crossing per corpus row, assignment/residual/encode in int64
+    numpy — (cand_id, cell, m, code), one row per (vector, subspace)."""
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            X = np.array([list(v) for v in pdf["sv"]], dtype=np.int64)
+            a = _np_assign(X, ix.C)
+            R = X - ix.C[a]
+            codes = np.empty((M_SUB, n), dtype=np.int64)
+            for m in range(M_SUB):
+                S = R[:, m * D_SUB:(m + 1) * D_SUB]
+                d = ((S[:, None, :] - ix.sub[m][None, :, :]) ** 2).sum(axis=2)
+                codes[m] = ix.cids[d.argmin(axis=1)]
+            yield pd.DataFrame({
+                "cand_id": np.tile(pdf["cand_id"].to_numpy(np.int64), M_SUB),
+                "cell": np.tile(ix.ids[a], M_SUB),
+                "m": np.repeat(np.arange(M_SUB, dtype=np.int32), n),
+                "code": codes.ravel(),
+            })
+
+    return cand.select("cand_id", "sv").mapInPandas(
+        kernel, schema="cand_id long, cell long, m int, code long"
     )
 
-    cb = sub.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + K_C)
-    ).select(F.col("vec_id").alias("cid"), "m", F.col("subv").alias("csub"))
 
-    # encode: nearest centroid per (candidate, subspace); ties → low cid
-    cand = sub.filter(F.col("vec_id") >= N_QUERIES).withColumnRenamed(
-        "vec_id", "cand_id"
-    )
-    dist = _SQDIST_S.format(a="subv", b="csub")
-    codes = (
-        cand.join(F.broadcast(cb), "m")
-        .select(
-            "cand_id", "m",
-            F.struct(F.expr(dist).alias("d"), F.col("cid").alias("c"))
-            .alias("dc"),
-        )
-        .groupBy("cand_id", "m")
-        .agg(F.min("dc").getField("c").alias("code"))
-    )
+def _np_qtab(queries, ix: PQIndex, nprobe: int):
+    """Probe + per-query ADC lookup tables, computed exactly on the
+    driver from the collected (vec_id, sv) query rows: an Arrow table of
+    (query_id, cell, m, cid, qdist), one row per codebook entry of each
+    probed (query, cell, subspace).  Probe order ties break on
+    (d, cell) ascending."""
+    import numpy as np
+    import pyarrow as pa
 
-    # per-query ADC lookup table: |q|·M·K_C rows, broadcast
-    qsub = sub.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    qtab = qsub.join(F.broadcast(cb), "m").select(
-        "query_id", "m", "cid", F.expr(dist).alias("qdist")
-    )
+    m = np.repeat(np.arange(M_SUB, dtype=np.int64), len(ix.cids))
+    cid = np.tile(ix.cids, M_SUB)
+    blocks = [np.zeros((5, 0), dtype=np.int64)]
+    for qid, qv in zip(*_np_rows(queries)):
+        d = ((qv[None, :] - ix.C) ** 2).sum(axis=1)
+        for j in np.lexsort((ix.ids, d))[:nprobe]:
+            res = (qv - ix.C[j]).reshape(M_SUB, 1, D_SUB)
+            qdist = ((res - ix.sub) ** 2).sum(axis=2).ravel()
+            blocks.append(np.stack([
+                np.full_like(m, qid), np.full_like(m, ix.ids[j]),
+                m, cid, qdist,
+            ]))
+    T = np.concatenate(blocks, axis=1)
+    return pa.table({
+        "query_id": T[0], "cell": T[1], "m": T[2].astype(np.int32),
+        "cid": T[3], "qdist": T[4],
+    })
 
-    adc = (
+
+def _adc_search(spark: SparkSession, codes: DataFrame, queries,
+               ix: PQIndex, nprobe: int) -> DataFrame:
+    """search(): join a (cand_id, cell, m, code) table to the broadcast
+    driver-built ADC tables of ``queries`` and sum per candidate —
+    (query_id, cand_id, cell, adc_dist) for candidates in probed cells
+    (the inner join is the inverted-list pruning)."""
+    qtab = spark.createDataFrame(_np_qtab(queries, ix, nprobe))
+    return (
         codes.join(
             F.broadcast(qtab),
-            (codes.m == qtab.m) & (codes.code == qtab.cid),
+            (codes.cell == qtab.cell)
+            & (codes.m == qtab.m)
+            & (codes.code == qtab.cid),
         )
-        .groupBy("query_id", "cand_id")
+        .select("query_id", "cand_id", codes.cell, "qdist")
+        .groupBy("query_id", "cand_id", "cell")
         .agg(F.sum("qdist").alias("adc_dist"))
     )
+
+
+def _adc_topk(adc: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Per-query top-``k`` of an ADC relation by (adc_dist, cand_id),
+    with an int ``rank`` column appended."""
     w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
     return (
         adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .filter(F.col("rank") <= k)
     )
+
+
+def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query top-``TOP_K`` candidates by PQ asymmetric distance:
+    IVFADC over one all-zero cell, so the residual codebook is the
+    band's own subvectors and every candidate is in the probed cell."""
+    import numpy as np
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.expr(_SV_S).alias("sv")
+    )
+    # one control-plane job: the queries and the codebook band
+    head = emb.filter(F.col("vec_id") < N_QUERIES + K_C).collect()
+    C = np.zeros((1, EMB_DIM), dtype=np.int64)
+    ix = PQIndex(np.zeros(1, dtype=np.int64), C, *_np_codebook(
+        [r for r in head if r["vec_id"] >= N_QUERIES], C
+    ))
+    cand = emb.filter(F.col("vec_id") >= N_QUERIES).withColumnRenamed(
+        "vec_id", "cand_id"
+    )
+    adc = _adc_search(
+        spark, _np_encode(cand, ix),
+        [r for r in head if r["vec_id"] < N_QUERIES], ix, nprobe=1,
+    )
+    return _adc_topk(adc.drop("cell"))
 
 
 _SV_Q = _sv_duck("embedding")

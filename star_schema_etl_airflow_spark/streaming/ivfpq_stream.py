@@ -1,7 +1,7 @@
 """IVFADC incremental add as a streaming job: delta vector batches
 land as files and each micro-batch is encoded against the FROZEN index
-artifacts (coarse cells + residual codebook), its codes folded into
-the persisted code table — the arrival-driven twin of
+(coarse cells + residual codebook), its codes folded into the
+persisted code table — the arrival-driven twin of
 ``plans/ivfpq.py::embed_ivfpq_incremental`` (whose batch-side
 append-encode is itself rebuild-oracle-proven).
 
@@ -11,25 +11,26 @@ Design notes:
   ``M_SUB`` rows per ingested vector, the FAISS inverted lists as a
   queryable relation.
 - Exactness of the fold: encoding is PER-VECTOR PURE given the frozen
-  ``(cells, cb)`` broadcast artifacts — a vector's (cell, code-per-
-  subspace) row set never depends on what else was in its batch — so
-  the folded table equals the one-shot encode of everything ever
-  ingested under ANY batching, and re-delivery adds only byte-
-  identical rows, which ``distinct`` collapses (naturally idempotent,
-  like the bottom-K/top-k folds and UNLIKE the additive drift counts —
-  no batch-id guard needed).
+  index — a vector's (cell, code-per-subspace) row set never depends
+  on what else was in its batch — so the folded table equals the
+  one-shot encode of everything ever ingested under ANY batching, and
+  re-delivery adds only byte-identical rows, which ``distinct``
+  collapses (naturally idempotent, like the bottom-K/top-k folds and
+  UNLIKE the additive drift counts — no batch-id guard needed).
 - Publish is the shared rename-aside swap with ``recover_swap``
   adoption at the top of each micro-batch; a complete code table
   exists at every instant, and search (``search_state``) is
   byte-identical ``_adc_scores`` machinery over the published state.
-- At 100 TB: per batch one batch-sized assign+encode against broadcast
-  artifacts (cells: NCELLS rows; codebook: M·K_C rows) plus a
-  distinct over state ∪ delta-codes.  The at-rest corpus participates
-  only through its frozen artifacts — never re-scanned.  (The
-  ``distinct`` touches the accumulated code table each batch; at
-  deployment scale the code table is partitioned by cell and the
-  delta appended per-partition — the fold here is the differential
-  spec for that.)
+- At 100 TB: the frozen index is a ``plans/ivfpq.py::build_index``
+  value — numpy arrays held by the driver (cells: NCELLS rows;
+  codebook: M·K_C entries) and shipped inside the encode kernel, so a
+  micro-batch collects nothing.  Per batch: one Arrow pass of the
+  ``plans/pq.py`` kernel over the batch plus a distinct over
+  state ∪ delta-codes.  The at-rest corpus participates only through
+  the frozen index — never re-scanned.  (The ``distinct`` touches the
+  accumulated code table each batch; at deployment scale the code
+  table is partitioned by cell and the delta appended per-partition —
+  the fold here is the differential spec for that.)
 """
 
 from __future__ import annotations
@@ -37,8 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from star_schema_etl_airflow_spark.plans.ivfpq import _encode
-from star_schema_etl_airflow_spark.plans.pq import _SV_S
+from star_schema_etl_airflow_spark.plans.pq import _SV_S, PQIndex, _np_encode
 from star_schema_etl_airflow_spark.sources.io import (
     _target_exists,
     publish_swap,
@@ -57,19 +57,17 @@ def merge_codes(existing: DataFrame | None, delta_codes: DataFrame) -> DataFrame
     return existing.unionByName(delta_codes).distinct()
 
 
-
 def run_ivfpq_stream(
     spark: SparkSession,
     landing_dir: str,
     state_path: str,
     source_schema,
-    cells: DataFrame,
-    cb: DataFrame,
+    index: PQIndex,
 ) -> DataFrame:
     """Consume all pending delta vector files (availableNow, one file
-    per micro-batch), encoding each against the frozen ``(cells, cb)``
-    and folding the codes into the persisted code table; returns the
-    final (cand_id, cell, m, code) relation."""
+    per micro-batch), encoding each against the frozen ``index`` (a
+    ``build_index`` value) and folding the codes into the persisted
+    code table; returns the final (cand_id, cell, m, code) relation."""
     stream = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", 1)
@@ -88,12 +86,8 @@ def run_ivfpq_stream(
         cand = batch_df.select(
             F.col("vec_id").alias("cand_id"), F.expr(_SV_S).alias("sv")
         )
-        delta_codes = _encode(cand, cells, cb).select(
-            "cand_id", "cell",
-            F.col("m").cast("int").alias("m"),
-            "code",
-        )
-        publish_swap(merge_codes(existing, delta_codes), state_path)
+        publish_swap(merge_codes(existing, _np_encode(cand, index)),
+                     state_path)
 
     query = (
         stream.writeStream.foreachBatch(fold_batch)

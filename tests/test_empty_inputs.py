@@ -85,21 +85,21 @@ def test_ivfpq_encode_empty_delta_is_identity(spark):
     from pyspark.sql import functions as F
 
     from star_schema_etl_airflow_spark.plans.ivfpq import (
-        _artifacts,
-        _encode,
+        _np_encode,
         _SV_S,
+        build_index,
     )
     from star_schema_etl_airflow_spark.sources.fixtures import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", F.expr(_SV_S).alias("sv")
     )
-    cells, cb = _artifacts(emb)
+    index = build_index(emb.collect())
     cand = emb.filter(F.col("vec_id") >= 10).withColumnRenamed(
         "vec_id", "cand_id"
     )
-    base = _encode(cand, cells, cb)
+    base = _np_encode(cand, index)
     merged = base.unionByName(
-        _encode(cand.filter(F.lit(False)), cells, cb)
+        _np_encode(cand.filter(F.lit(False)), index)
     )
     assert merged.count() == base.count()

@@ -8,18 +8,21 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from star_schema_etl_airflow_spark.functions.caching import persist_once
 from star_schema_etl_airflow_spark.plans.ivfpq import (
     IVFPQ_ADD_CUT,
-    _artifacts,
-    _encode,
+    build_index,
     embed_ivfpq_incremental,
 )
-from star_schema_etl_airflow_spark.plans.pq import N_QUERIES, TOP_K, _SV_S
+from star_schema_etl_airflow_spark.plans.pq import (
+    N_QUERIES,
+    _adc_topk,
+    _np_encode,
+    _SV_S,
+)
 from star_schema_etl_airflow_spark.streaming.ivfpq_stream import (
     merge_codes,
     run_ivfpq_stream,
@@ -38,13 +41,13 @@ def _frozen(spark):
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .select("vec_id", F.expr(_SV_S).alias("sv"))
     )
-    cells, cb = _artifacts(emb)
-    cells, cb = persist_once(cells), persist_once(cb)
+    # the index is trained on the at-rest corpus only
+    index = build_index(emb.filter(F.col("vec_id") < IVFPQ_ADD_CUT).collect())
     at_rest = emb.filter(
         (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < IVFPQ_ADD_CUT)
     ).withColumnRenamed("vec_id", "cand_id")
-    at_codes = persist_once(_encode(at_rest, cells, cb))
-    return emb, cells, cb, at_codes
+    at_codes = persist_once(_np_encode(at_rest, index))
+    return emb, index, at_codes
 
 
 def _stage_delta(spark, tmp_path, n_batches, name="landing"):
@@ -76,31 +79,31 @@ def _code_set(df):
 def test_folded_codes_equal_oneshot_encode_and_batching_independent(
     spark, tmp_path
 ):
-    emb, cells, cb, _ = _frozen(spark)
+    emb, index, _ = _frozen(spark)
     delta, landing3 = _stage_delta(spark, tmp_path, 3, "landing3")
     _, landing1 = _stage_delta(spark, tmp_path, 1, "landing1")
     s3 = run_ivfpq_stream(
-        spark, landing3, str(tmp_path / "st3"), SRC_SCHEMA, cells, cb
+        spark, landing3, str(tmp_path / "st3"), SRC_SCHEMA, index
     )
     s1 = run_ivfpq_stream(
-        spark, landing1, str(tmp_path / "st1"), SRC_SCHEMA, cells, cb
+        spark, landing1, str(tmp_path / "st1"), SRC_SCHEMA, index
     )
-    want = _code_set(_encode(
+    want = _code_set(_np_encode(
         delta.select(
             F.col("vec_id").alias("cand_id"), F.expr(_SV_S).alias("sv")
         ),
-        cells, cb,
+        index,
     ))
     assert _code_set(s3) == want
     assert _code_set(s1) == want
 
 
 def test_redelivery_is_a_noop(spark):
-    emb, cells, cb, _ = _frozen(spark)
+    emb, index, _ = _frozen(spark)
     delta = emb.filter(F.col("vec_id") >= IVFPQ_ADD_CUT).withColumnRenamed(
         "vec_id", "cand_id"
     )
-    codes = _encode(delta, cells, cb)
+    codes = _np_encode(delta, index)
     once = merge_codes(None, codes)
     twice = merge_codes(once, codes)
     assert _code_set(once) == _code_set(twice)
@@ -110,33 +113,23 @@ def test_search_over_folded_state_equals_batch_incremental(spark, tmp_path):
     """fold ≡ batch: _adc_scores over (at-rest codes ∪ streamed state)
     must reproduce embed_ivfpq_incremental row-for-row — and that query
     shares the full-rebuild oracle, closing stream ≡ batch ≡ rebuild."""
-    _, cells, cb, at_codes = _frozen(spark)
+    _, index, at_codes = _frozen(spark)
     _, landing = _stage_delta(spark, tmp_path, 3, "landing_s")
     state = run_ivfpq_stream(
-        spark, landing, str(tmp_path / "st_s"), SRC_SCHEMA, cells, cb
+        spark, landing, str(tmp_path / "st_s"), SRC_SCHEMA, index
     )
     adc, _ = search_state(spark, SF_DIR, state, at_rest_codes=at_codes)
-    wr = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    got = {
-        tuple(r)
-        for r in adc.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cell", "adc_dist",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .collect()
-    }
+    got = {tuple(r) for r in _adc_topk(adc).collect()}
     want = {tuple(r) for r in embed_ivfpq_incremental(spark, SF_DIR).collect()}
     assert got == want
 
 
 def test_empty_landing_yields_empty_code_table(spark, tmp_path):
-    _, cells, cb, _ = _frozen(spark)
+    _, index, _ = _frozen(spark)
     landing = str(tmp_path / "landing_empty")
     os.makedirs(landing)
     state = run_ivfpq_stream(
-        spark, landing, str(tmp_path / "st_e"), SRC_SCHEMA, cells, cb
+        spark, landing, str(tmp_path / "st_e"), SRC_SCHEMA, index
     )
     assert state.count() == 0
     assert [f.name for f in state.schema.fields] == [

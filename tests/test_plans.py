@@ -462,18 +462,20 @@ def test_dsir_broadcasts_ratio_table_and_takes_ordered(spark):
 
 
 def test_pq_adc_broadcasts_codebook_with_partial_window_limit(spark):
-    """PQ encode and ADC scoring broadcast the codebook / lookup tables
-    (both control-plane sized); the per-query top-k window must carry a
-    map-side Partial WindowGroupLimit like the exact top-k does."""
+    """Flat PQ runs the IVFADC kernel over one cell: the encode is one
+    numpy MapInPandas pass, ADC scoring broadcasts the driver-built
+    lookup table (control-plane sized), and the per-query top-k window
+    must carry a map-side Partial WindowGroupLimit like the exact top-k
+    does — the same pinned shape as embed_ivfpq_topk."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_audit import assert_adc_plan
+
     from star_schema_etl_airflow_spark.plans.pq import pq_adc_topk
 
-    plan = _plan(pq_adc_topk(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-    assert any(
-        "WindowGroupLimit" in l and "Partial" in l
-        for l in plan.splitlines()
-    ), plan
+    assert_adc_plan(_plan(pq_adc_topk(spark, SF_DIR)))
 
 
 def test_substring_dedup_two_corpus_shuffles_no_skew_collect(spark):

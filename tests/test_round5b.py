@@ -126,6 +126,50 @@ def test_pq_adc_distances_are_nonnegative_and_monotone(spark):
         assert dists == sorted(dists)
 
 
+def test_np_kernel_breaks_distance_ties_toward_lowest_id(spark):
+    """The oracles' ``min(struct(d, id))`` contract: a vector
+    equidistant from two cells lands in the lower cell id, and a
+    residual equidistant from two codebook entries in every subspace
+    takes the lower codebook id.  Rows are handed over in descending id
+    order, so the kernel's id sort, not input order, decides."""
+    from star_schema_etl_airflow_spark.plans.pq import (
+        D_SUB,
+        EMB_DIM,
+        M_SUB,
+        PQIndex,
+        _np_codebook,
+        _np_encode,
+        _np_qtab,
+        _np_rows,
+    )
+
+    zero = np.zeros(EMB_DIM, dtype=np.int64)
+    e = zero.copy()
+    e[1] = 5                       # cells at ±e: the origin is 25 from both
+    s = zero.copy()
+    s[::D_SUB] = 1                 # one unit in every subspace
+    ids, C = _np_rows(
+        [{"cell": 9, "csv": -e}, {"cell": 4, "csv": e}], "cell", "csv"
+    )
+    # the origin's residual in cell 4 is -e; entries -e ± s are 1 away
+    # from it in every subspace
+    cids, sub = _np_codebook(
+        [{"vec_id": 21, "sv": -e - s}, {"vec_id": 20, "sv": -e + s}],
+        zero[None, :],
+    )
+    ix = PQIndex(ids, C, cids, sub)
+
+    cand = spark.createDataFrame(
+        [(7, zero.tolist())], "cand_id long, sv array<bigint>"
+    )
+    rows = _np_encode(cand, ix).collect()
+    assert sorted((r.m, r.cell, r.code) for r in rows) == [
+        (m, 4, 20) for m in range(M_SUB)
+    ]
+    probe = _np_qtab([{"vec_id": 0, "sv": zero}], ix, nprobe=1)
+    assert set(probe.column("cell").to_pylist()) == {4}
+
+
 # ------------------------------------------------------------- UniMax
 
 

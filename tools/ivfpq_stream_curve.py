@@ -6,7 +6,7 @@ incremental-add fold (r13 verdict task 5 — the ivfpq_stream twin of
 ``streaming/ivfpq_stream.py`` encodes each micro-batch of vectors
 against the FROZEN index artifacts and folds the codes into the
 persisted code table.  The 100 TB claim: per-batch cost is the batch's
-own assign+encode against broadcast artifacts, plus a merge whose only
+own assign+encode against the frozen index, plus a merge whose only
 growing input is the accumulated code table (M_SUB rows per ingested
 vector) — the AT-REST CORPUS never participates beyond its frozen
 artifacts.  This tool measures both axes:
@@ -88,9 +88,8 @@ def main() -> None:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from star_schema_etl_airflow_spark.functions.caching import persist_once
-    from star_schema_etl_airflow_spark.plans.ivfpq import _artifacts, _encode
-    from star_schema_etl_airflow_spark.plans.pq import _SV_S
+    from star_schema_etl_airflow_spark.plans.ivfpq import build_index
+    from star_schema_etl_airflow_spark.plans.pq import _SV_S, _np_encode
     from star_schema_etl_airflow_spark.session import get_spark
     from star_schema_etl_airflow_spark.streaming.ivfpq_stream import (
         run_ivfpq_stream,
@@ -102,13 +101,11 @@ def main() -> None:
         T.StructField("vec_id", T.LongType()),
         T.StructField("embedding", T.ArrayType(T.FloatType())),
     ])
-    # frozen artifacts from the real sf0.001 fixture (index version 0)
+    # the frozen index from the real sf0.001 fixture (index version 0)
     fix = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).select("vec_id", F.expr(_SV_S).alias("sv"))
-    cells, cb = _artifacts(fix)
-    cells, cb = persist_once(cells), persist_once(cb)
-    cells.count(), cb.count()
+    index = build_index(fix.collect())
 
     cal = [pyloop()]
     rows = []
@@ -125,13 +122,10 @@ def main() -> None:
                     F.col("vec_id").alias("cand_id"),
                     F.expr(_SV_S).alias("sv"),
                 )
-                _encode(at, cells, cb).select(
-                    "cand_id", "cell",
-                    F.col("m").cast("int").alias("m"), "code",
-                ).write.mode("overwrite").parquet(state)
+                _np_encode(at, index).write.mode("overwrite").parquet(state)
             t0 = time.perf_counter()
             final = run_ivfpq_stream(
-                spark, landing, state, schema, cells, cb
+                spark, landing, state, schema, index
             )
             wall = time.perf_counter() - t0
             n_state = final.count()

@@ -127,6 +127,10 @@ EXTRA = [
 ]
 
 
+def _indent(line: str) -> int:
+    return re.match(r"^[\s:+\-]*", line).end()
+
+
 def runtime_count(plan: str, needle: str) -> int:
     """Occurrences of ``needle`` that actually execute, counting each
     persisted subtree ONCE: the printed tree re-inlines an
@@ -151,13 +155,13 @@ def _scan_tree(lines: list[str], needle: str,
     i = 0
     while i < len(lines):
         line = lines[i]
-        ind = re.match(r"^[\s:+\-]*", line).end()
+        ind = _indent(line)
         if "InMemoryRelation" in line:
             j = i + 1
             raw: list[str] = []
             sub: list[str] = []
             while j < len(lines):
-                ind2 = re.match(r"^[\s:+\-]*", lines[j]).end()
+                ind2 = _indent(lines[j])
                 if ind2 <= ind:
                     break
                 raw.append(lines[j])
@@ -195,6 +199,45 @@ def runtime_exchanges(plan: str) -> int:
     at runtime — use this, not ``plan.count("Exchange")``, for shuffle
     pins on plans containing ``.persist()`` boundaries."""
     return runtime_count(plan, "Exchange")
+
+
+def _children(lines: list[str], i: int) -> list[int]:
+    """Line indices of the direct children of the node on line ``i``."""
+    kids = []
+    for j in range(i + 1, len(lines)):
+        if _indent(lines[j]) <= _indent(lines[i]):
+            break
+        if _indent(lines[j]) == _indent(lines[i]) + 3:
+            kids.append(j)
+    return kids
+
+
+def assert_adc_plan(plan: str) -> None:
+    """The pinned search shape of the (IVF)PQ family: no cartesian or
+    nested-loop join; exactly one ``MapInPandas`` (the numpy encode);
+    every ``BroadcastHashJoin`` builds on the driver-built ADC table
+    (a ``LocalTableScan`` carrying ``qdist``), so the corpus is never a
+    build side; and a Partial ``WindowGroupLimit`` sits on the map side
+    of the per-query rank ``Exchange`` (the first one printed), before
+    any further shuffle."""
+    lines = plan.splitlines()
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert sum("MapInPandas" in l for l in lines) == 1, plan
+    joins = [i for i, l in enumerate(lines) if "BroadcastHashJoin" in l]
+    assert joins, plan
+    for i in joins:
+        left, right = _children(lines, i)
+        build = right if "BuildRight" in lines[i] else left
+        assert "BroadcastExchange" in lines[build], lines[build]
+        (scan,) = _children(lines, build)
+        assert "LocalTableScan" in lines[scan], lines[scan]
+        assert "qdist" in lines[scan], lines[scan]
+    exchanges = [i for i, l in enumerate(lines) if "Exchange " in l
+                 and "BroadcastExchange" not in l] + [len(lines)]
+    partial = [i for i, l in enumerate(lines)
+               if "WindowGroupLimit" in l and "Partial" in l]
+    assert any(exchanges[0] < i < exchanges[1] for i in partial), plan
 
 
 def summarize(plan: str) -> str:
